@@ -129,17 +129,18 @@ object CveFlatten {
     coalesce(item.getField("impact").getField("baseMetricV2").getField("cvssV2").getField(field),
       lit(""))
 
-  /** Read one-or-more NVD 1.1 feed files (one JSON document per file)
-    * and explode to items. `multiLine=true` because a feed is a single
-    * multi-line document; parallelism comes from many feed files,
-    * mirroring the reference's per-year file loop.
-    */
-  def readFeed(spark: SparkSession, paths: Seq[String]): DataFrame =
+  /** The one reader of NVD 1.1 feed files: a single multi-line JSON
+    * document per file, PERMISSIVE so a malformed one lands in `_corrupt_record`. */
+  private def scanFeeds(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.schema(NvdSchema.feed)
       .option("multiLine", "true")
       .option("mode", "PERMISSIVE")
       .json(paths: _*)
-      .select(explode(col("CVE_Items")).as("item"))
+
+  /** Read one-or-more feed files and explode to items, beside any
+    * per-document `passthrough` columns (e.g. of `_metadata`). */
+  def readFeed(spark: SparkSession, paths: Seq[String], passthrough: Column*): DataFrame =
+    scanFeeds(spark, paths).select(explode(col("CVE_Items")).as("item") +: passthrough: _*)
 
   /** Full flatten pipeline for a set of feed files. */
   def flattenFeed(spark: SparkSession, paths: Seq[String],
@@ -155,16 +156,12 @@ object CveFlatten {
     * so the frame is control-plane sized: `Pipeline.run` collects it
     * to quarantine broken feeds before the flatten. */
   def feedAudit(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.schema(NvdSchema.feed)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .json(paths: _*)
-      .select(
-        input_file_name().as("file"),
-        col(NvdSchema.corruptRecordCol).isNotNull.as("corrupt"),
-        substring(coalesce(col(NvdSchema.corruptRecordCol), lit("")), 1, 200)
-          .as("corrupt_sample"),
-        coalesce(size(col("CVE_Items")), lit(0)).cast("long").as("n_items"))
+    scanFeeds(spark, paths).select(
+      input_file_name().as("file"),
+      col(NvdSchema.corruptRecordCol).isNotNull.as("corrupt"),
+      substring(coalesce(col(NvdSchema.corruptRecordCol), lit("")), 1, 200)
+        .as("corrupt_sample"),
+      coalesce(size(col("CVE_Items")), lit(0)).cast("long").as("n_items"))
 
   /** Read feed ZIPS directly — decompression happens in the scan
     * tasks (graft.sources.ZipTextSource), not on the driver like the

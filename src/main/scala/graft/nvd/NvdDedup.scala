@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object NvdDedup {
 
-  /** df must carry `cve_id` and `feed_rank`; later rank wins. */
+  /** df must carry `cve_id` and `feed_rank`; later rank wins; one row per `cve_id`. */
   def lastWriteWins(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cve_id"))
       .orderBy(col("feed_rank").desc, col("last_modified_datetime").desc)
@@ -24,10 +24,4 @@ object NvdDedup {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Idempotence guard for streaming re-delivery: drop exact logical
-    * duplicates before the window (reference gets this for free from
-    * keyed REPLACE). */
-  def dropExactDupes(df: DataFrame): DataFrame =
-    df.dropDuplicates("cve_id", "last_modified_datetime", "feed_rank")
 }

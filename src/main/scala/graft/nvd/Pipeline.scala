@@ -3,21 +3,22 @@ package graft.nvd
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.{Path => HPath}
 
 /** End-to-end orchestration of the ingest dataflow (reference `main()`
   * paths, SURVEY §3.1/§3.2):
   *
   *   enumerate feeds -> fetch .meta -> freshness gate -> fetch + unzip
-  *   -> spark.read.json(all stale feeds at once) -> explode -> flatten
-  *   -> union with feed_rank -> last-write-wins dedup -> store upsert
-  *   + history append -> tally report.
+  *   -> spark.read.json(all stale feeds at once) -> explode + feed_rank
+  *   from each row's source file -> flatten -> last-write-wins dedup
+  *   -> store upsert + history append -> tally report.
   *
   * The network side is abstracted behind `Fetcher` so tests inject
   * local files; the default implementation uses java.net — the
   * control-plane (a handful of ~2 MB zips) stays on the driver, and
-  * the data-plane starts at the parallel JSON scan (one task per feed
-  * file, matching the reference's per-year granularity but running
-  * all feeds concurrently instead of sequentially).
+  * the data-plane starts at one multi-file JSON scan (Spark packs the
+  * small whole-file feed documents into about `defaultParallelism`
+  * tasks, so feeds the reference looped over parse concurrently).
   */
 object Pipeline {
 
@@ -111,10 +112,9 @@ object Pipeline {
       failFast: Boolean = false,
       jdbcMirror: Option[MySqlSink.Conf] = None): LoadReport = {
 
-    val before =
-      if (NvdStore.pathExists(spark, storePath))
-        NvdStore.cveTally(NvdStore.read(spark, storePath))
-      else 0L
+    def tally(): Long = if (!NvdStore.pathExists(spark, storePath)) 0L
+      else NvdStore.cveTally(NvdStore.read(spark, storePath))
+    val before = tally()
 
     // Control plane: metas + freshness gate (J2), set-based.
     val metas = feeds.flatMap { f =>
@@ -140,8 +140,9 @@ object Pipeline {
     // is subject to the same failFast contract as a meta failure —
     // the feed is skipped (and NOT recorded in history, so the next
     // cycle retries it) instead of sinking the whole load.
+    // (Spark gets Hadoop path strings: it would read a URI string's `%20` literally)
     val fetched = stale.flatMap { f =>
-      try Some(f -> fetcher.feedJson(f.modifier, stagingDir).toUri.toString)
+      try Some(f -> new HPath(fetcher.feedJson(f.modifier, stagingDir).toUri).toString)
       catch {
         case e: Exception if !failFast =>
           System.err.println(s"[pipeline] skipping feed '${f.modifier}': fetch failed: ${e.getMessage}")
@@ -159,14 +160,13 @@ object Pipeline {
     val corrupt: Seq[CorruptFeed] =
       if (fetched.isEmpty) Nil
       else {
-        val byName = fetched.map { case (f, p) =>
-          p.split('/').last -> f.modifier
-        }.toMap
+        // `file` is a URL-encoded URI (`file:///`): compare as paths, not strings
+        val modifierOf = fetched.map { case (f, p) => new HPath(p) -> f.modifier }.toMap
         CveFlatten.feedAudit(spark, fetched.map(_._2))
           .filter(col("corrupt")).collect().toSeq
           .map { r =>
             val file = r.getAs[String]("file")
-            CorruptFeed(byName.getOrElse(file.split('/').last, "?"),
+            CorruptFeed(modifierOf.getOrElse(new HPath(new java.net.URI(file)), "?"),
               file, r.getAs[String]("corrupt_sample"))
           }
       }
@@ -176,23 +176,14 @@ object Pipeline {
     val loadable = fetched.filterNot { case (f, _) => corruptModifiers.contains(f.modifier) }
 
     if (loadable.nonEmpty) {
-      // One tagged read per feed unioned into a single plan — the
-      // union's scans execute as parallel tasks (one+ per file), so
-      // ~27 feeds load concurrently where the reference looped
-      // sequentially.
-      val flat = loadable.map { case (f, p) =>
-        CveFlatten.readFeed(spark, Seq(p)).withColumn("feed_rank", lit(f.rank))
-      }.map(CveFlatten.flattenItems(_, strictReferenceSemantics))
-        .reduce(_ unionByName _)
-      val deduped = NvdDedup.lastWriteWins(NvdDedup.dropExactDupes(flat))
-
-      NvdStore.upsert(spark, deduped.drop("feed_rank"), storePath)
+      val batch = loadBatch(spark, loadable, strictReferenceSemantics)
+      NvdStore.upsert(spark, batch, storePath)
 
       // Optional JDBC mirror (reference parity: the reference's only
       // sink IS MySQL). Upserts THIS run's loaded rows — the keyed
       // REPLACE semantics match NvdStore.upsert, so store and mirror
       // converge on the same content per cve_id.
-      jdbcMirror.foreach(conf => MySqlSink.upsert(deduped.drop("feed_rank"), conf))
+      jdbcMirror.foreach(conf => MySqlSink.upsert(batch, conf))
 
       // history records only feeds that actually LOADED — a
       // quarantined feed stays stale and is re-fetched next cycle
@@ -203,14 +194,28 @@ object Pipeline {
       jdbcMirror.foreach(conf => MySqlSink.appendHistory(historyRows, conf))
     }
 
-    // A run where every feed was skipped may end with no store at all.
-    val after =
-      if (NvdStore.pathExists(spark, storePath))
-        NvdStore.cveTally(NvdStore.read(spark, storePath))
-      else 0L
+    // nothing loaded: the store was not written, so the tally is unchanged
+    val after = if (loadable.isEmpty) before else tally()
     val report = LoadReport(feeds.size, loadable.size, before, after, corrupt)
     audit(report)
     report
+  }
+
+  /** The deduplicated load batch: ONE JSON scan, one flatten, one
+    * last-write-wins window, whatever the number of feeds. Paths are as
+    * `run` fetches them, absolute with a scheme; a scanned file with no
+    * rank fails the job rather than lose its precedence. */
+  private[nvd] def loadBatch(spark: SparkSession, loadable: Seq[(FeedCatalog.Feed, String)],
+      strictReferenceSemantics: Boolean): DataFrame = {
+    // keyed in `_metadata.file_path`'s form: URL-encoded, a space is `%20`
+    val rankOf =
+      typedLit(loadable.map { case (f, p) => new HPath(p).toUri.toString -> f.rank }.toMap)
+    val file = col("_metadata.file_path")
+    val items = CveFlatten.readFeed(spark, loadable.map(_._2),
+      coalesce(element_at(rankOf, file), raise_error(concat(lit("no feed rank for "), file)))
+        .as("feed_rank"))
+    NvdDedup.lastWriteWins(CveFlatten.flattenItems(items, strictReferenceSemantics))
+      .drop("feed_rank")
   }
 
   /** Audit lines mirroring the reference's syslog notices

@@ -228,6 +228,81 @@ class NvdPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r2.cvesAfter === 3)
   }
 
+  /** Three ranked feeds in a directory whose name holds a space, as
+    * does the top feed's file name. The shared CVE-2020-0001's
+    * lastModifiedDate goes DOWN as rank goes up, and the names sort
+    * against rank, so only a rank taken from each row's file path picks
+    * the rank-2 row. `corrupt` names a feed written truncated. */
+  private def rankedFeeds(corrupt: Option[String] = None)
+      : (java.nio.file.Path, Seq[FeedCatalog.Feed]) = {
+    val dir = Files.createDirectory(Files.createTempDirectory("nvdrank").resolve("feed dir"))
+    val feeds = Seq(FeedCatalog.Feed("zulu", 0), FeedCatalog.Feed("mike", 1),
+      FeedCatalog.Feed("alpha one", 2))
+    feeds.foreach { f =>
+      def item(id: String) =
+        s"""{"cve": {"CVE_data_meta": {"ID": "$id"}, "description": {"description_data":
+           |[{"lang": "en", "value": "from ${f.modifier}"}]}},
+           |"publishedDate": "2020-01-01T00:00Z",
+           |"lastModifiedDate": "2020-0${9 - f.rank}-01T00:00Z"}""".stripMargin
+      val doc = s"""{"CVE_data_type": "CVE", "CVE_Items": [
+        |${item("CVE-2020-0001")}, ${item(s"CVE-2020-100${f.rank}")}]}""".stripMargin
+      Files.writeString(dir.resolve(s"${f.modifier}.json"),
+        if (corrupt.contains(f.modifier)) doc.take(doc.length / 2) else doc)
+      Files.writeString(dir.resolve(s"${f.modifier}.meta"),
+        "lastModifiedDate:2020-09-01T00:00:00-04:00\r\nsize:1\r\n")
+    }
+    (dir, feeds)
+  }
+
+  private def loadRanked(corrupt: Option[String]): (Pipeline.LoadReport, Map[String, String], Set[String]) = {
+    val sp = spark; import sp.implicits._
+    val (dir, feeds) = rankedFeeds(corrupt)
+    val tmp = dir.getParent
+    val r = Pipeline.run(spark, feeds, new Pipeline.LocalFetcher(dir),
+      tmp.resolve("store").toString, tmp.resolve("hist").toString,
+      Files.createDirectory(tmp.resolve("staging")))
+    val summaries = NvdStore.read(spark, tmp.resolve("store").toString)
+      .select("cve_id", "summary").as[(String, String)].collect().toMap
+    val history = spark.read.parquet(tmp.resolve("hist").toString)
+      .select("download_name").as[String].collect().toSet
+    (r, summaries, history)
+  }
+
+  test("one-scan load: feed_rank comes from each row's file path, not dates or scan order") {
+    val (r, summaries, history) = loadRanked(corrupt = None)
+    assert(r.feedsLoaded === 3)
+    assert(summaries === Map(
+      "CVE-2020-0001" -> "from alpha one", // rank 2 wins despite the oldest date
+      "CVE-2020-1000" -> "from zulu", "CVE-2020-1001" -> "from mike",
+      "CVE-2020-1002" -> "from alpha one"))
+    assert(history === Set("zulu", "mike", "alpha one"))
+    assert(r.cvesAfter === 4)
+  }
+
+  test("one-scan load: a corrupt feed's rows are absent and it is left out of update_history") {
+    val (r, summaries, history) = loadRanked(corrupt = Some("alpha one"))
+    assert(r.feedsLoaded === 2)
+    assert(r.corruptFeeds.map(_.modifier) === Seq("alpha one"))
+    assert(summaries === Map(
+      "CVE-2020-0001" -> "from mike", // next rank down wins
+      "CVE-2020-1000" -> "from zulu", "CVE-2020-1001" -> "from mike"))
+    assert(history === Set("zulu", "mike"))
+  }
+
+  test("the load batch's optimized plan holds ONE JSON file relation for three feeds") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    val (dir, feeds) = rankedFeeds()
+    val loadable = feeds.map(f =>
+      f -> new org.apache.hadoop.fs.Path(dir.resolve(s"${f.modifier}.json").toUri).toString)
+    val batch = Pipeline.loadBatch(spark, loadable, strictReferenceSemantics = true)
+    val jsonScans = batch.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case h: HadoopFsRelation if h.fileFormat.isInstanceOf[JsonFileFormat] => h }
+    assert(jsonScans.size === 1)
+    assert(jsonScans.head.location.inputFiles.length === 3)
+  }
+
   test("a feed with an unreachable .meta is skipped, not fatal (failFast=false default)") {
     val tmp = Files.createTempDirectory("nvdskip")
     val feeds = Seq(FeedCatalog.Feed("2002", 0), FeedCatalog.Feed("nonexistent", 1))
