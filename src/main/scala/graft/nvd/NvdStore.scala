@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
   * lookups on `cve_id` are served by parquet min/max + dictionary
   * filters within each year file).
   *
-  * At cluster scale the same layout holds: one year ≈ one directory,
-  * files sized by `maxRecordsPerFile`, and the upsert path rewrites
-  * only the years present in the incoming batch (partition overwrite
-  * mode = dynamic), never the whole table — the Spark-native
-  * equivalent of keyed REPLACE (reference K1).
+  * Every write leaves each year it touches as ONE parquet file sorted
+  * by `cve_id`, so a point lookup opens one file per year and parquet
+  * min/max on `cve_id` stays tight per row group. The price is write
+  * parallelism: at most one task per touched year (~25 years at real
+  * NVD scale, the largest ~40k CVEs). The upsert path rewrites only
+  * the years present in the incoming batch, never the whole table —
+  * the Spark-native equivalent of keyed REPLACE (reference K1).
   */
 object NvdStore {
 
@@ -39,12 +41,11 @@ object NvdStore {
         substring(col("published_datetime"), 1, 4))
         .otherwise(lit("1900")))
 
-  /** Full (re)write of the store. */
-  def write(df: DataFrame, path: String): Unit =
-    withYear(df).write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(yearCol)
-      .parquet(path)
+  // Each year in one task, sorted by (year, cve_id): the writer's required
+  // ordering on the partition column is a prefix, so Spark adds no sort.
+  private def writeByYear(df: DataFrame, path: String): Unit =
+    df.repartition(col(yearCol)).sortWithinPartitions(col(yearCol), col("cve_id"))
+      .write.mode(SaveMode.Overwrite).partitionBy(yearCol).parquet(path)
 
   /** Upsert a deduped batch: merge with existing rows for the touched
     * years only, last write (the batch) wins, rewrite just those
@@ -62,26 +63,26 @@ object NvdStore {
   def upsert(spark: SparkSession, batch: DataFrame, path: String): Unit = {
     val withY = withYear(batch).cache()
     try {
-      // an empty batch must not CREATE the store: partitionBy of zero
-      // rows writes a _SUCCESS-only dir that every later read of the
-      // "existing" store fails on (no parquet schema to infer)
-      if (withY.isEmpty) return
-      if (!pathExists(spark, path)) {
-        withY.write.mode(SaveMode.Overwrite).partitionBy(yearCol).parquet(path)
-      } else {
-        val batchYears = withY.select(yearCol).distinct().collect().map(_.getString(0))
+      val batchYears = withY.select(yearCol).distinct().collect().map(_.getString(0))
+      // an empty batch (no years) must not CREATE the store: partitionBy
+      // of zero rows writes a _SUCCESS-only dir that every later read of
+      // the "existing" store fails on (no parquet schema to infer)
+      if (batchYears.isEmpty) return
+      if (!pathExists(spark, path)) writeByYear(withY, path) else {
+        // one listing + schema inference shared by both uses below
+        val stored = spark.read.parquet(path)
         // A CVE can MOVE years (publish date corrected upstream): its
         // old row lives in a partition the batch doesn't touch. Find
         // those via a column-pruned (cve_id, year) scan and include
         // their years in the rewrite set, or the store would keep two
         // rows per corrected cve_id — the reference's keyed REPLACE
         // never does.
-        val movedYears = spark.read.parquet(path)
+        val movedYears = stored
           .select(col("cve_id"), col(yearCol).cast("string").as(yearCol))
           .join(withY.select("cve_id"), Seq("cve_id"), "left_semi")
           .select(yearCol).distinct().collect().map(_.getString(0))
         val years = (batchYears ++ movedYears).distinct
-        val existing = spark.read.parquet(path)
+        val existing = stored
           .filter(col(yearCol).isin(years.toIndexedSeq: _*))
           // incoming batch wins over stored rows for the same cve_id
           .join(withY.select("cve_id"), Seq("cve_id"), "left_anti")
@@ -91,8 +92,7 @@ object NvdStore {
         val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val staging = new org.apache.hadoop.fs.Path(
           path + ".staging-" + java.util.UUID.randomUUID())
-        merged.write.mode(SaveMode.Overwrite).partitionBy(yearCol)
-          .parquet(staging.toString)
+        writeByYear(merged, staging.toString)
         try {
           years.foreach { y =>
             val src = new org.apache.hadoop.fs.Path(staging, s"$yearCol=$y")
@@ -116,7 +116,7 @@ object NvdStore {
     // restore any partition whose swap was interrupted mid-rename
     val hPath = new org.apache.hadoop.fs.Path(path)
     graft.operators.SwapDir.healAll(
-      hPath.getFileSystem(spark.sparkContext.hadoopConfiguration), hPath)
+      hPath.getFileSystem(spark.sparkContext.hadoopConfiguration), hPath, maxDepth = 1)
     spark.read.parquet(path)
   }
 

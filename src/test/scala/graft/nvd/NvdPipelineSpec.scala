@@ -403,6 +403,74 @@ class NvdPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(NvdStore.cveTally(NvdStore.read(spark, store)) === 3)
   }
 
+  /** Every `publish_year=` directory holds exactly one data file, and
+    * that directory, read on its own, lists its cve_ids in ascending
+    * order. */
+  private def assertOneSortedFilePerYear(store: String): Unit = {
+    val sp = spark; import sp.implicits._
+    val yearDirs = new java.io.File(store).listFiles()
+      .filter(_.getName.startsWith(s"${NvdStore.yearCol}="))
+    assert(yearDirs.nonEmpty)
+    yearDirs.foreach { d =>
+      val files = d.list().filter(_.endsWith(".parquet"))
+      assert(files.length === 1, s"${d.getName}: ${files.mkString(", ")}")
+      val ids = spark.read.parquet(d.getPath).select("cve_id").as[String].collect().toSeq
+      assert(ids === ids.sorted, d.getName)
+    }
+  }
+
+  test("a 3-feed load leaves each publish year as one cve_id-sorted parquet file") {
+    val tmp = Files.createTempDirectory("nvdlayout")
+    val store = tmp.resolve("store").toString
+    val feeds = Seq(FeedCatalog.Feed("2002", 0), FeedCatalog.Feed("2021", 1),
+      FeedCatalog.Feed("modified", 2))
+    val r = Pipeline.run(spark, feeds, new Pipeline.LocalFetcher(fixtures),
+      store, tmp.resolve("hist").toString, Files.createDirectory(tmp.resolve("staging")))
+    assert(r.feedsLoaded === 3)
+    assert(r.cvesAfter === 7)
+    assertOneSortedFilePerYear(store)
+  }
+
+  test("an upsert that moves a CVE's year rewrites each touched year as one cve_id-sorted file") {
+    val sp = spark; import sp.implicits._
+    val store = Files.createTempDirectory("nvdmovelayout").resolve("store").toString
+    // ids in descending order, spread over the local relation's partitions
+    val first = (for (y <- 2019 to 2021; n <- 1 to 6) yield
+      (f"CVE-$y-$n%04d", s"$y-0$n-01T00:00:00", "orig")).reverse
+    NvdStore.upsert(spark, first.toDF("cve_id", "published_datetime", "summary"), store)
+    assertOneSortedFilePerYear(store)
+    // 2020-0003 moves into 2019; 2021 gets an update and a new CVE
+    NvdStore.upsert(spark, Seq(
+      ("CVE-2021-0009", "2021-09-01T00:00:00", "added"),
+      ("CVE-2021-0002", "2021-02-01T00:00:00", "updated"),
+      ("CVE-2020-0003", "2019-12-31T00:00:00", "moved"))
+      .toDF("cve_id", "published_datetime", "summary"), store)
+    val rows = NvdStore.read(spark, store)
+      .select("cve_id", "summary", NvdStore.yearCol).collect()
+      .map(r => r.getString(0) -> ((r.getString(1), r.get(2).toString))).toMap
+    assert(rows.size === 19)
+    assert(rows("CVE-2020-0003") === (("moved", "2019")))
+    assert(rows("CVE-2021-0002") === (("updated", "2021")))
+    assert(rows("CVE-2021-0009") === (("added", "2021")))
+    assert(rows("CVE-2020-0004") === (("orig", "2020")))
+    assertOneSortedFilePerYear(store)
+  }
+
+  test("read restores a year directory whose swap was interrupted mid-rename") {
+    val sp = spark; import sp.implicits._
+    val store = Files.createTempDirectory("nvdheal").resolve("store")
+    NvdStore.upsert(spark, Seq(
+      ("CVE-2020-0001", "2020-05-01T00:00:00", "a"),
+      ("CVE-2021-0001", "2021-05-01T00:00:00", "b"))
+      .toDF("cve_id", "published_datetime", "summary"), store.toString)
+    val before = NvdStore.cveTally(NvdStore.read(spark, store.toString))
+    assert(before === 2)
+    val year = store.resolve(s"${NvdStore.yearCol}=2020")
+    Files.move(year, store.resolve(s".${NvdStore.yearCol}=2020.swapold"))
+    assert(NvdStore.cveTally(NvdStore.read(spark, store.toString)) === before)
+    assert(Files.isDirectory(year))
+  }
+
   test("cveTally = COUNT(DISTINCT cve_id) (reference :494)") {
     assert(NvdStore.cveTally(flat2002) === 3)
   }
